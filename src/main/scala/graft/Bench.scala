@@ -1,5 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Driver-run benchmark: every SparkEntry query against
   * SPARK_GRAFT_SF_DIR.
@@ -29,8 +33,8 @@ import org.apache.spark.sql.SparkSession
   * iterations, repeated up to a 9-iteration cap, so one polluted run can't
   * dominate the median. Per-query `"min"` ships beside the median — a
   * stable min with a high median is bench noise, not a plan regression.
-  * All raw iteration times ship in `"runs"` so the variance is
-  * inspectable. A query whose PRIMARY iterations throw reports -1, lands
+  * All raw iteration times ship in `"runs"`, in execution order, so the
+  * variance and the first-iteration cost are inspectable. A query whose PRIMARY iterations throw reports -1, lands
   * in `"errors"`, and bumps `"failed"` — `total` covers succeeded queries
   * only, so regression comparison must gate on `failed == 0` first (a
   * broken query must never look fast). A failure during a spread-triggered
@@ -45,6 +49,15 @@ import org.apache.spark.sql.SparkSession
   * readings ship under `"retried"` so consumers can tell best-of-two from
   * single-shot numbers.
   *
+  * Every timed iteration is split at one timestamp taken after
+  * `fn(spark, dir)`: `construct_s` (DataFrame building, analysis and any
+  * eager `localCheckpoint` jobs the query runs while assembling its plan)
+  * and `exec_s` (the noop-sink write). A [[Census]] listener counts the
+  * iteration's Spark jobs, stages, tasks and summed executor run time;
+  * the listener bus is drained after each iteration, so no count bleeds
+  * into the next one. BENCH_DETAIL.json ships these as `"layers"`, taken
+  * from each query's median iteration.
+  *
   * Both summary lines carry a `"load"` contention stamp (loadavg
   * before/after, process cpu-vs-wall ratio): round 7 shipped a bench
   * captured on a busy machine and the artifact had no way to show it.
@@ -52,6 +65,58 @@ import org.apache.spark.sql.SparkSession
   * self-identifying as contaminated — rerun it; don't diff it.
   */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** One timed iteration: wall time split into construct and exec, plus
+    * the Spark work it scheduled. */
+  final case class Layers(wallS: Double, constructS: Double, execS: Double,
+                          jobs: Int, stages: Int, tasks: Int, taskS: Double) {
+    def json: String =
+      s"""{"construct_s":$constructS,"exec_s":$execS,"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_s":$taskS}"""
+  }
+
+  /** Counts finished jobs, completed stages, their tasks and summed
+    * executor run time since the last [[reset]]. */
+  final class Census extends SparkListener {
+    private val jobs = new AtomicInteger
+    private val stages = new AtomicInteger
+    private val tasks = new AtomicInteger
+    private val taskMs = new AtomicLong
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.incrementAndGet()
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
+      tasks.addAndGet(e.stageInfo.numTasks)
+      taskMs.addAndGet(e.stageInfo.taskMetrics.executorRunTime)
+    }
+    def reset(): Unit = { jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L) }
+    private[graft] def layers(t0: Long, t1: Long, t2: Long): Layers =
+      Layers((t2 - t0) / 1e9, (t1 - t0) / 1e9, (t2 - t1) / 1e9,
+        jobs.get, stages.get, tasks.get, taskMs.get / 1e3)
+  }
+
+  /** One timed iteration of `fn` on `dir` through the noop sink.
+    * `census` must be registered on `spark`; the listener bus is drained
+    * on both sides of the iteration, outside the timed region. */
+  def measure(spark: SparkSession, census: Census, fn: Query,
+              dir: String): Either[String, Layers] = {
+    Bridge.drainListenerBus(spark)
+    census.reset()
+    val t0 = System.nanoTime()
+    try {
+      val df = fn(spark, dir)
+      val t1 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      val t2 = System.nanoTime()
+      Bridge.drainListenerBus(spark)
+      Right(census.layers(t0, t1, t2))
+    } catch { case e: Throwable =>
+      Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}") }
+  }
+
+  private final case class Result(name: String, median: Double, min: Double,
+    runs: Seq[Double], layers: Option[Layers], err: Option[String],
+    retryErr: Option[String])
+
   def main(args: Array[String]): Unit = {
     // f-interpolators format through the default locale; a comma-decimal
     // locale would make the JSON summary unparseable
@@ -59,9 +124,9 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.local(cpus.toInt, "graft-bench")
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-            dir: String): Unit =
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
+    val census = new Census
+    spark.sparkContext.addSparkListener(census)
+    def timeOnce(fn: Query, dir: String = sfDir) = measure(spark, census, fn, dir)
     // Warm-up: session/codegen/scan/shuffle setup paid once, not by the
     // first queries. One query per broad plan class (scan+agg+sort,
     // window+join, HOF-array/hash, stateful exchange-heavy) — the
@@ -69,19 +134,11 @@ object Bench {
     // absorbing JVM/JIT warm-up regardless of which they were, so the
     // warm-up must touch each execution framework, not just one plan.
     Seq("wordcount", "q_topk_orders", "q_dedup_minhash", "q_sessionize")
-      .foreach { w => SparkEntry.queries.get(w)
-        .foreach(fn => try run(fn, sfDir) catch { case _: Throwable => () }) }
+      .foreach(w => SparkEntry.queries.get(w).foreach(timeOnce(_)))
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     def jstr(s: String): String =
       "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
         case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString } + "\""
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                 dir: String = sfDir) = {
-      val t0 = System.nanoTime()
-      try { run(fn, dir); Right((System.nanoTime() - t0) / 1e9) }
-      catch { case e: Throwable =>
-        Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}") }
-    }
     val maxIters = 9
     // Contention stamp: BENCH_r07 was captured on a busy machine and its
     // numbers were garbage (6 phantom "regressions", all vanishing when
@@ -119,9 +176,10 @@ object Bench {
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (name, fn) =>
       val primary = (1 to iters).map(_ => timeOnce(fn))
-      var extras = Vector.empty[Either[String, Double]]
-      def ts = (primary ++ extras).collect { case Right(t) => t }
-      def spreadOver2x = { val t = ts; t.size > 1 && t.max > 2 * t.min }
+      var extras = Vector.empty[Either[String, Layers]]
+      def ok = (primary ++ extras).collect { case Right(l) => l }
+      def spreadOver2x = {
+        val t = ok.map(_.wallS); t.size > 1 && t.max > 2 * t.min }
       // high-spread tail: settle the heap, then add 2 iterations; repeat
       // until the spread is ≤2× or the iteration cap is hit, so one
       // GC-polluted run can't dominate the median
@@ -131,28 +189,29 @@ object Bench {
         val room = maxIters - primary.size - extras.size
         extras ++= (1 to math.min(2, room)).map(_ => timeOnce(fn))
       }
-      val times = ts.sorted
+      val runs = ok
+      val byWall = runs.sortBy(_.wallS)
+      val times = byWall.map(_.wallS)
       val median =
         if (times.isEmpty) -1.0
         else if (times.size % 2 == 1) times(times.size / 2)
         else (times(times.size / 2 - 1) + times(times.size / 2)) / 2
-      val minT = if (times.isEmpty) -1.0 else times.head
-      val err = primary.collectFirst { case Left(m) => m }
-      val retryErr = extras.collectFirst { case Left(m) => m }
-      (name, median, minT, times, err, retryErr)
+      Result(name, median, times.headOption.getOrElse(-1.0), runs.map(_.wallS),
+        byWall.lift(byWall.size / 2),
+        primary.collectFirst { case Left(m) => m },
+        extras.collectFirst { case Left(m) => m })
     }
-    val qs = results.map { case (k, m, _, _, _, _) => jstr(k) + ":" + m }
-      .mkString("{", ",", "}")
-    val mins = results.map { case (k, _, mn, _, _, _) => jstr(k) + ":" + mn }
-      .mkString("{", ",", "}")
-    val raw = results.map { case (k, _, _, ts, _, _) =>
-      jstr(k) + ":" + ts.mkString("[", ",", "]") }.mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, _, _, Some(m), _) =>
-      jstr(k) + ":" + jstr(m) }.mkString("{", ",", "}")
-    val retryErrs = results.collect { case (k, _, _, _, None, Some(m)) =>
-      jstr(k) + ":" + jstr(m) }.mkString("{", ",", "}")
-    val failed = results.count { case (_, _, _, _, e, _) => e.isDefined }
-    val total = results.map { case (_, m, _, _, _, _) => math.max(m, 0.0) }.sum
+    def obj(entries: Seq[(String, String)]): String =
+      entries.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+    val qs = obj(results.map(r => r.name -> r.median.toString))
+    val mins = obj(results.map(r => r.name -> r.min.toString))
+    val raw = obj(results.map(r => r.name -> r.runs.mkString("[", ",", "]")))
+    val layers = obj(results.flatMap(r => r.layers.map(l => r.name -> l.json)))
+    val errs = obj(results.flatMap(r => r.err.map(m => r.name -> jstr(m))))
+    val retryErrs = obj(results.collect {
+      case Result(k, _, _, _, _, None, Some(m)) => k -> jstr(m) })
+    val failed = results.count(_.err.isDefined)
+    val total = results.map(r => math.max(r.median, 0.0)).sum
     // Variant pass: the whole suite once against the multi-file /
     // lang-partitioned mirror of the same sf dir (split planning +
     // partition pruning under bench conditions). One timed iteration per
@@ -165,12 +224,12 @@ object Bench {
         ("", "")
       else try {
         val pdir = graft.io.PartitionedFixture.prepare(spark, sfDir)
-        try run(SparkEntry.queries("wordcount"), pdir) catch { case _: Throwable => () }
-        val medians = results.map { case (k, m, _, _, _, _) => k -> m }.toMap
+        timeOnce(SparkEntry.queries("wordcount"), pdir)
+        val medians = results.map(r => r.name -> r.median).toMap
         val pres = SparkEntry.queries.toSeq.sortBy(benchOrder)
           .filter { case (name, _) => only.isEmpty || only(name) }
           .map { case (name, fn) =>
-            val first = timeOnce(fn, pdir)
+            val first = timeOnce(fn, pdir).map(_.wallS)
             // single-iteration pass, so one heap polluted by the previous
             // query lands straight in the number (round-6 evidence: the
             // 4 queries alphabetically after a 14 s mirror query read
@@ -185,21 +244,20 @@ object Bench {
               case Right(t) if medians.get(name).exists(m => m > 0 && t > 3 * m) =>
                 System.gc(); Thread.sleep(200)
                 timeOnce(fn, pdir) match {
-                  case Right(t2) => (Right(math.min(t, t2)), Some((t, t2)))
-                  case Left(_)   => (first, None)
+                  case Right(l) => (Right(math.min(t, l.wallS)), Some((t, l.wallS)))
+                  case Left(_)  => (first, None)
                 }
               case other => (other, None)
             }
             (name, best, retryRuns)
           }
-        val pqs = pres.map { case (k, r, _) =>
-          jstr(k) + ":" + r.fold(_ => -1.0, identity) }.mkString("{", ",", "}")
-        val pErrs = pres.collect { case (k, Left(m), _) => jstr(k) + ":" + jstr(m) }
-          .mkString("{", ",", "}")
+        val pqs = obj(pres.map { case (k, r, _) =>
+          k -> r.fold(_ => -1.0, identity).toString })
+        val pErrs = obj(pres.collect { case (k, Left(m), _) => k -> jstr(m) })
         // both readings for every >3x-median entry that was re-timed, so
         // bench_diff consumers can separate best-of-two from single-shot
-        val pRetried = pres.collect { case (k, _, Some((t1, t2))) =>
-          jstr(k) + ":" + s"[$t1,$t2]" }.mkString("{", ",", "}")
+        val pRetried = obj(pres.collect { case (k, _, Some((t1, t2))) =>
+          k -> s"[$t1,$t2]" })
         val pFailed = pres.count(_._2.isLeft)
         val pTotal = pres.collect { case (_, Right(t), _) => t }.sum
         (s""","partitioned":{"dir":${jstr(pdir)},"total":$pTotal,"failed":$pFailed,"queries":$pqs,"errors":$pErrs,"retried":$pRetried}""",
@@ -214,7 +272,7 @@ object Bench {
     // 1; a contended run shows elevated loadavg AND a depressed ratio
     val loadStamp =
       f""""load":{"loadavg_start":$loadStart%.2f,"loadavg_end":$loadAvg%.2f,"proc_cpu_sec":$cpuSec%.1f,"wall_sec":$wallSec%.1f,"cpu_wall_ratio":${if (wallSec > 0) cpuSec / wallSec else -1.0}%.2f}"""
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","iters":$iters,"failed":$failed,"queries":$qs,"min":$mins,"runs":$raw,"errors":$errs,"retry_errors":$retryErrs$partitioned,$loadStamp,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","iters":$iters,"failed":$failed,"queries":$qs,"min":$mins,"runs":$raw,"layers":$layers,"errors":$errs,"retry_errors":$retryErrs$partitioned,$loadStamp,"sf":"$sfDir"}"""
     // Full per-query detail is large (tens of KB): persist it to a file and
     // echo it early. The harness that invokes Bench keeps only a short tail
     // of stdout, so the LAST line printed is a compact summary (<1.5 KB):
@@ -231,14 +289,11 @@ object Bench {
         jstr(detailPath)
       } catch { case _: Throwable => "null" }
     println(full)
-    val ok = results.filter { case (_, _, _, _, e, _) => e.isEmpty }
-    val headline = (ok.sortBy { case (_, m, _, _, _, _) => -m }.take(18)
-      .map(_._1).toSet + "wordcount")
-    val cqs = results
-      .filter { case (name, _, _, _, e, _) => headline(name) || e.isDefined }
-      .map { case (k, m, _, _, _, _) => jstr(k) + ":" + f"$m%.3f" }
-      .mkString("{", ",", "}")
-    val errNames = results.collect { case (k, _, _, _, Some(_), _) => jstr(k) }
+    val headline = results.filter(_.err.isEmpty).sortBy(-_.median).take(18)
+      .map(_.name).toSet + "wordcount"
+    val cqs = obj(results.filter(r => headline(r.name) || r.err.isDefined)
+      .map(r => r.name -> f"${r.median}%.3f"))
+    val errNames = results.filter(_.err.isDefined).map(r => jstr(r.name))
       .mkString("[", ",", "]")
     println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","iters":$iters,"failed":$failed,"n_queries":${results.size},"detail":$detailJson,"queries":$cqs,"error_queries":$errNames$pSummary,$loadStamp,"sf":"$sfDir"}""")
     spark.stop()

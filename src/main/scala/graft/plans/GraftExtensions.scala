@@ -26,7 +26,13 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
   *    see TopKMin);
   *  - `hll_det(BIGINT) -> ARRAY<INT>` (deterministic HyperLogLog
   *    registers over 32-bit hashes — fixed 256-byte state, oracle-
-  *    verifiable estimate, see HllDet).
+  *    verifiable estimate, see HllDet);
+  *  - `nfc(STRING) -> STRING` (Unicode NFC, ASCII zero-copy, see
+  *    NfcNormalize);
+  *  - `normalized_tokens(STRING) -> ARRAY<STRING>` (the reference
+  *    tokenizer in one byte pass, see NormalizedTokens);
+  *  - `h32(STRING) -> BIGINT` (first 4 md5 digest bytes as unsigned
+  *    BIGINT, see H32).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

@@ -69,10 +69,6 @@ case class H60(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object H60 {
-  val info: ExpressionInfo = new ExpressionInfo(classOf[H60].getName, "h60")
-}
-
 object H32 {
   val info: ExpressionInfo = new ExpressionInfo(classOf[H32].getName, "h32")
 

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Prints the AQE FINAL plan for the named queries — the plan that actually
   * executed, after adaptive re-planning (join-strategy switches, skew
@@ -11,20 +10,15 @@ import graft.SparkEntry
   * 100 TB evidence, because it is re-derived from runtime stats per run.
   *
   * Run: `tools/run.sh graft.tools.AqePlan [sfDir] <query...>`
+  * (SPARK_GRAFT_CPUS threads; the bench session, so sf1 recursive CTEs
+  * get the same row-limit guard as the bench)
   */
 object AqePlan {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.io.Tables.EventsNanosConf._1, graft.io.Tables.EventsNanosConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.install(spark)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = GraftSession.local(cpus.toInt, "graft-aqeplan")
 
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

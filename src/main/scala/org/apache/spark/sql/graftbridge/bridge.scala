@@ -42,6 +42,11 @@ object Bridge {
         case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
       }.foreach(_.unpersist(blocking = false))
 
+  /** Block until every event posted so far has reached every listener
+    * (the bus is asynchronous; `listenerBus` is `private[spark]`). */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Register a function by name on an ALREADY-RUNNING session (the
     * `spark.sql.extensions` config only applies at session build time). */
   def registerFunction(

@@ -8,6 +8,36 @@ import graft.queries.{Dedup, Similarity, TextAnalysis}
   * ANN) and their exact counterparts. */
 class DedupSimilaritySpec extends SparkSpec {
 
+  /** Letters-only base-26 encoding (digits vanish in the §2.3 normalizer). */
+  private def b26(i: Int): String = {
+    var n = i; val sb = new StringBuilder
+    do { sb.append(('a' + n % 26).toChar); n /= 26 } while (n > 0)
+    sb.result()
+  }
+
+  /** Deterministic hot-shingle corpus written as `<dir>/documents.parquet`
+    * (the Tables layout): every document opens with the same 7-word header
+    * — 5 trigrams with df = nDocs — followed by a letters-only 25-word tail
+    * unique to the document. Every 10th doc clones the previous doc's tail
+    * with the last 2 words replaced (jaccard ≈ 0.8 — a qualifying near-dup
+    * at threshold 0.2); all other pairs share only the 5 boilerplate
+    * trigrams (jaccard 5/55 ≈ 0.09 — below threshold). */
+  private def writeHotShingle(nDocs: Int, dir: String): String = {
+    import spark.implicits._
+    def tail(doc: Int): IndexedSeq[String] =
+      (0 until 25).map(k => s"q${b26(doc)}z${b26(k)}")
+    val rows = (0 until nDocs).map { i =>
+      val t =
+        if (i % 10 == 9) tail(i - 1).dropRight(2) ++ Seq(s"r${b26(i)}za", s"r${b26(i)}zb")
+        else tail(i)
+      val text = "the quick brown fox jumps over lazy " + t.mkString(" ")
+      (i.toLong, text, "en", "hotshingle", text.length.toLong)
+    }
+    rows.toDF("doc_id", "text", "lang", "source", "n_chars").repartition(8)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
   test("exact dedup: every doc maps to a canonical id <= itself; canonicals are not dups") {
     val rows = Dedup.qDedupExact(spark, sf).collect()
     assert(rows.nonEmpty)
@@ -43,11 +73,11 @@ class DedupSimilaritySpec extends SparkSpec {
   test("hot-shingle corpus: prefix plan drops boilerplate trigrams yet stays answer-exact") {
     // the corpus class the prefix plan exists for: 5 trigrams with
     // df = nDocs (boilerplate header) that the rarest-first ranking pushes
-    // beyond every prefix. Measured at 4000 docs via
-    // graft.tools.HotShingleBench: postings 14.0 s vs prefix 1.7 s — this
-    // pins the completeness half (identical answers) and the drop-out
-    // mechanism itself on a 400-doc corpus
-    val dir = graft.tools.HotShingleBench.write(spark, 400,
+    // beyond every prefix. Measured at 4000 docs by the hot-shingle bench
+    // main (commit 5de4228, SURVEY §8.8): postings 14.0 s vs prefix 1.7 s
+    // — this pins the completeness half (identical answers) and the
+    // drop-out mechanism itself on a 400-doc corpus
+    val dir = writeHotShingle(400,
       java.nio.file.Files.createTempDirectory("hotshingle").toString)
     val viaCount = Dedup.qNgramJaccard(spark, dir).collect().map(_.toString).toSeq
     val viaPrefix = Dedup.qNgramJaccardPrefix(spark, dir).collect().map(_.toString).toSeq

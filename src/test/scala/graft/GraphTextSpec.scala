@@ -799,8 +799,9 @@ class GraphTextSpec extends SparkSpec {
   test("vocab coverage: bounded TakeOrdered selection == the global rank window, and the bound is in the plan") {
     // the respelling may only change the PLAN (per-partition top-16 merge
     // instead of a single-partition sort of the whole vocabulary) — never
-    // the answer; VocabRankBench re-proves this at the sf1 decade and on
-    // the 10x-vocabulary open-vocab control
+    // the answer; the vocabulary-rank bench main (commit 384b437, SURVEY
+    // §8.12–8.13) re-proved this at the sf1 decade and on the
+    // 10x-vocabulary open-vocab control
     for (d <- Seq(sf, "/root/testdata/sf0.01")) {
       val bounded = TextAnalysis.qVocabCoverage(spark, d)
       assert(bounded.collect().map(_.toString).toSeq ==

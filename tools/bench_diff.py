@@ -9,7 +9,10 @@ the common-subset totals, every query whose median regressed by more than
 <threshold>x (default 1.5), and the biggest improvements. A regression
 whose MIN also regressed is flagged REAL (plan growth); a high median over
 a stable min is bench noise (GC / suite contention) — the min rule from
-the Bench scaladoc, applied mechanically.
+the Bench scaladoc, applied mechanically. When both files carry the
+per-query "layers" census (BENCH_DETAIL.json since the census landed),
+each regressed query also shows its jobs and tasks old->new, so a
+regression that scheduled more Spark work is visible at a glance.
 
 Exit code 1 if either file has failed queries or any REAL regression
 exceeds the threshold, so round-end hygiene can gate on it.
@@ -134,10 +137,19 @@ def main():
     rows.sort(reverse=True)
 
     regressions = [(r, k) for r, k in rows if r > threshold]
+    ol, nl = old.get("layers"), new.get("layers")
+    census = isinstance(ol, dict) and isinstance(nl, dict)
+
+    def moved(k, field):
+        o, n = ol.get(k, {}).get(field, "-"), nl.get(k, {}).get(field, "-")
+        return f"{o}->{n}"
+
     if regressions:
         print(f"\nregressions > {threshold}x (median):")
         print(f"{'query':28s} {'old':>7s} {'new':>7s} {'ratio':>6s} "
-              f"{'old_min':>8s} {'new_min':>8s}  verdict")
+              f"{'old_min':>8s} {'new_min':>8s}  "
+              + (f"{'jobs':>9s} {'tasks':>11s}  " if census else "")
+              + "verdict")
         for r, k in regressions:
             omin, nmin = om.get(k, -1), nm.get(k, -1)
             # stable min + high median = noise; regressed min = real
@@ -147,8 +159,10 @@ def main():
                        else "unconfirmed (no min data)")
             if real:
                 bad = True
+            cols = (f"{moved(k, 'jobs'):>9s} {moved(k, 'tasks'):>11s}  "
+                    if census else "")
             print(f"{k:28s} {oq[k]:7.2f} {nq[k]:7.2f} {r:5.2f}x "
-                  f"{omin:8.2f} {nmin:8.2f}  {verdict}")
+                  f"{omin:8.2f} {nmin:8.2f}  {cols}{verdict}")
     else:
         print(f"\nno regressions > {threshold}x")
 
