@@ -1,8 +1,10 @@
 package graft
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Driver-run benchmark: every SparkEntry query against
@@ -55,8 +57,11 @@ import org.apache.spark.sql.graftbridge.Bridge
   * and `exec_s` (the noop-sink write). A [[Census]] listener counts the
   * iteration's Spark jobs, stages, tasks and summed executor run time;
   * the listener bus is drained after each iteration, so no count bleeds
-  * into the next one. BENCH_DETAIL.json ships these as `"layers"`, taken
-  * from each query's median iteration.
+  * into the next one. Two JVM-wide counters, read next to the drains,
+  * give the iteration's compile cost: `codegen_n` classes compiled by
+  * Janino and `codegen_s` seconds spent compiling them (a query that
+  * reuses cached classes reads 0). BENCH_DETAIL.json ships these as
+  * `"layers"`, taken from each query's median iteration.
   *
   * Both summary lines carry a `"load"` contention stamp (loadavg
   * before/after, process cpu-vs-wall ratio): round 7 shipped a bench
@@ -68,12 +73,17 @@ object Bench {
   type Query = (SparkSession, String) => DataFrame
 
   /** One timed iteration: wall time split into construct and exec, plus
-    * the Spark work it scheduled. */
+    * the Spark work it scheduled and the generated code it compiled. */
   final case class Layers(wallS: Double, constructS: Double, execS: Double,
-                          jobs: Int, stages: Int, tasks: Int, taskS: Double) {
+                          jobs: Int, stages: Int, tasks: Int, taskS: Double,
+                          codegenN: Long, codegenS: Double) {
     def json: String =
-      s"""{"construct_s":$constructS,"exec_s":$execS,"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_s":$taskS}"""
+      s"""{"construct_s":$constructS,"exec_s":$execS,"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_s":$taskS,"codegen_n":$codegenN,"codegen_s":$codegenS}"""
   }
+
+  /** (classes compiled, nanoseconds compiling) since JVM start. */
+  private def codegenCounters: (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
   /** Counts finished jobs, completed stages, their tasks and summed
     * executor run time since the last [[reset]]. */
@@ -89,18 +99,22 @@ object Bench {
       taskMs.addAndGet(e.stageInfo.taskMetrics.executorRunTime)
     }
     def reset(): Unit = { jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L) }
-    private[graft] def layers(t0: Long, t1: Long, t2: Long): Layers =
+    private[graft] def layers(t0: Long, t1: Long, t2: Long,
+                              compiled: Long, compileNs: Long): Layers =
       Layers((t2 - t0) / 1e9, (t1 - t0) / 1e9, (t2 - t1) / 1e9,
-        jobs.get, stages.get, tasks.get, taskMs.get / 1e3)
+        jobs.get, stages.get, tasks.get, taskMs.get / 1e3,
+        compiled, compileNs / 1e9)
   }
 
   /** One timed iteration of `fn` on `dir` through the noop sink.
     * `census` must be registered on `spark`; the listener bus is drained
-    * on both sides of the iteration, outside the timed region. */
+    * and the compile counters are read on both sides of the iteration,
+    * outside the timed region. */
   def measure(spark: SparkSession, census: Census, fn: Query,
               dir: String): Either[String, Layers] = {
     Bridge.drainListenerBus(spark)
     census.reset()
+    val (n0, ns0) = codegenCounters
     val t0 = System.nanoTime()
     try {
       val df = fn(spark, dir)
@@ -108,7 +122,8 @@ object Bench {
       df.write.format("noop").mode("overwrite").save()
       val t2 = System.nanoTime()
       Bridge.drainListenerBus(spark)
-      Right(census.layers(t0, t1, t2))
+      val (n1, ns1) = codegenCounters
+      Right(census.layers(t0, t1, t2, n1 - n0, ns1 - ns0))
     } catch { case e: Throwable =>
       Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}") }
   }

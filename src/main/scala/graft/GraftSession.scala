@@ -16,9 +16,22 @@ import org.apache.spark.sql.SparkSession
   *  - nanos-timestamp parquet read enabled (the events table contract,
   *    see Tables.events);
   *  - the native kernels SQL-registered (GraftExtensions), so
-  *    `spark.sql("... cosine_sim(...)")` works out of the box.
+  *    `spark.sql("... cosine_sim(...)")` works out of the box;
+  *  - Spark's JVM-wide generated-class cache sized to the catalog's
+  *    working set ([[CodegenCacheEntries]]), so a query run again in the
+  *    same JVM reuses its compiled classes instead of recompiling them.
+  *    The default 100 entries hold less than one pass of the 14-query
+  *    tail panel (~210 classes); a cold sf0.01 pass over all 288 queries
+  *    compiles ~4,300 distinct classes. Metaspace used after a second
+  *    full pass goes from 198 MB (100 entries) to 230 MB (8192).
   */
 object GraftSession {
+
+  /** `spark.sql.codegen.cache.maxEntries`: ~2x the ~4,300 distinct
+    * classes one cold sf0.01 pass over all 288 queries compiles. A static
+    * conf, read when Spark's CodeGenerator is first used, so it takes
+    * effect only if GraftSession builds the JVM's first session. */
+  val CodegenCacheEntries = 8192
 
   /** Build (or reuse) the recommended local session. */
   def local(threads: Int, appName: String = "graft"): SparkSession = {
@@ -54,6 +67,7 @@ object GraftSession {
       // cannot carry it. Session-level guard goes to the int ceiling;
       // runaway recursion stays bounded by the per-query LEVEL limit.
       .config("spark.sql.cteRecursionRowLimit", Int.MaxValue.toString)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

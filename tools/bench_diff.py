@@ -12,7 +12,10 @@ a stable min is bench noise (GC / suite contention) — the min rule from
 the Bench scaladoc, applied mechanically. When both files carry the
 per-query "layers" census (BENCH_DETAIL.json since the census landed),
 each regressed query also shows its jobs and tasks old->new, so a
-regression that scheduled more Spark work is visible at a glance.
+regression that scheduled more Spark work is visible at a glance; when
+both also carry the compile counters (codegen_n classes compiled,
+codegen_s seconds compiling), those show old->new too, so a regression
+that recompiled generated code is told apart from one that ran longer.
 
 Exit code 1 if either file has failed queries or any REAL regression
 exceeds the threshold, so round-end hygiene can gate on it.
@@ -139,16 +142,19 @@ def main():
     regressions = [(r, k) for r, k in rows if r > threshold]
     ol, nl = old.get("layers"), new.get("layers")
     census = isinstance(ol, dict) and isinstance(nl, dict)
+    codegen = census and all(
+        any("codegen_n" in v for v in d.values()) for d in (ol, nl))
 
-    def moved(k, field):
-        o, n = ol.get(k, {}).get(field, "-"), nl.get(k, {}).get(field, "-")
-        return f"{o}->{n}"
+    def moved(k, field, fmt="{}"):
+        o, n = (d.get(k, {}).get(field) for d in (ol, nl))
+        return "->".join("-" if v is None else fmt.format(v) for v in (o, n))
 
     if regressions:
         print(f"\nregressions > {threshold}x (median):")
         print(f"{'query':28s} {'old':>7s} {'new':>7s} {'ratio':>6s} "
               f"{'old_min':>8s} {'new_min':>8s}  "
               + (f"{'jobs':>9s} {'tasks':>11s}  " if census else "")
+              + (f"{'codegen_n':>11s} {'codegen_s':>11s}  " if codegen else "")
               + "verdict")
         for r, k in regressions:
             omin, nmin = om.get(k, -1), nm.get(k, -1)
@@ -161,6 +167,9 @@ def main():
                 bad = True
             cols = (f"{moved(k, 'jobs'):>9s} {moved(k, 'tasks'):>11s}  "
                     if census else "")
+            if codegen:
+                cols += (f"{moved(k, 'codegen_n'):>11s} "
+                         f"{moved(k, 'codegen_s', '{:.2f}'):>11s}  ")
             print(f"{k:28s} {oq[k]:7.2f} {nq[k]:7.2f} {r:5.2f}x "
                   f"{omin:8.2f} {nmin:8.2f}  {cols}{verdict}")
     else:

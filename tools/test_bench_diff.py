@@ -1,5 +1,5 @@
 """Tests of tools/bench_diff.py: the failed-query gate, the REAL-vs-noise
-min rule, and the per-query jobs/tasks columns.
+min rule, and the per-query jobs/tasks and compile-counter columns.
 
 Run: python3 -m unittest discover -s tools -p 'test_*.py'
 """
@@ -23,9 +23,12 @@ def bench(queries, mins, failed=0, layers=None):
     return d
 
 
-def census(jobs, tasks):
-    return {"construct_s": 0.1, "exec_s": 0.2, "jobs": jobs, "stages": jobs,
-            "tasks": tasks, "task_s": 0.3}
+def census(jobs, tasks, codegen=None):
+    d = {"construct_s": 0.1, "exec_s": 0.2, "jobs": jobs, "stages": jobs,
+         "tasks": tasks, "task_s": 0.3}
+    if codegen is not None:
+        d["codegen_n"], d["codegen_s"] = codegen
+    return d
 
 
 class BenchDiffTest(unittest.TestCase):
@@ -87,6 +90,26 @@ class BenchDiffTest(unittest.TestCase):
         row = next(l for l in out.splitlines() if l.startswith("q "))
         self.assertIn("4->6", row)
         self.assertIn("30->40", row)
+
+    def test_codegen_columns_need_counters_in_both_files(self):
+        # old-format census (no compile counters) against a new-format one:
+        # jobs/tasks columns only
+        old = bench({"q": 1.0}, {"q": 0.9}, layers={"q": census(4, 30)})
+        new = bench({"q": 2.0}, {"q": 1.9},
+                    layers={"q": census(4, 30, codegen=(212, 2.5))})
+        _, out = self.diff(old, new)
+        self.assertIn("jobs", out)
+        self.assertNotIn("codegen", out)
+        # both new-format: classes compiled and compile seconds old->new
+        old["layers"] = {"q": census(4, 30, codegen=(0, 0.0))}
+        _, out = self.diff(old, new)
+        header = next(l for l in out.splitlines() if l.startswith("query"))
+        self.assertIn("codegen_n", header)
+        self.assertIn("codegen_s", header)
+        row = next(l for l in out.splitlines() if l.startswith("q "))
+        self.assertIn("4->4", row)
+        self.assertIn("0->212", row)
+        self.assertIn("0.00->2.50", row)
 
 
 if __name__ == "__main__":
